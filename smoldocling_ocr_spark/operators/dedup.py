@@ -256,6 +256,10 @@ def register(query) -> None:
         from fractions import Fraction
 
         tf = Fraction(JACCARD_THRESHOLD)
+        # the gap argument above needs a small q: a threshold such as 0.3
+        # is the double 5404319552844595/18014398509481984, whose q*union
+        # gap is far below an ulp and whose products overflow a long
+        assert tf.denominator <= 1000, f"JACCARD_THRESHOLD {JACCARD_THRESHOLD} is not a small fraction"
         keep = inter * F.lit(tf.denominator + tf.numerator) >= (
             F.size("shs_a") + F.size("shs_b")
         ) * F.lit(tf.numerator)

@@ -13,7 +13,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Observation, functions as F, types as T
 from pyspark import TaskContext
 
 LINEAGE_SCHEMA = T.StructType(
@@ -88,13 +88,18 @@ def extraction_lineage(extracted: DataFrame) -> DataFrame:
             F.min("url").alias("min_url"),
             F.max("url").alias("max_url"),
         )
-        .orderBy(*keys)
+        # one file sorted by key, without the range-sampling job and the
+        # exchange of a global orderBy; one partition holds the relation,
+        # which has a row per extraction task, not per document
+        .coalesce(1)
+        .sortWithinPartitions(*keys)
     )
 
 
-def extraction_metrics(extracted: DataFrame) -> DataFrame:
-    """Aggregate job metrics over the extracted table (relational — one pass)."""
-    return extracted.agg(
+def _metric_columns() -> list[Column]:
+    """The job metrics, one aggregate each — the single definition behind
+    both ``extraction_metrics`` and ``observe_metrics``."""
+    return [
         F.count("*").alias("docs"),
         F.sum(F.when(F.col("parse_failed"), 1).otherwise(0)).alias("parse_failures"),
         F.sum(F.when(F.col("method") == "pdf_parse_failed", 1).otherwise(0)).alias(
@@ -108,4 +113,18 @@ def extraction_metrics(extracted: DataFrame) -> DataFrame:
         F.sum("captions_linked").alias("captions_linked"),
         F.sum("footnotes_linked").alias("footnotes_linked"),
         F.sum("noise_tagged").alias("noise_tagged"),
-    )
+    ]
+
+
+def extraction_metrics(extracted: DataFrame) -> DataFrame:
+    """Aggregate job metrics over the extracted table (relational — one pass)."""
+    return extracted.agg(*_metric_columns())
+
+
+def observe_metrics(extracted: DataFrame) -> tuple[DataFrame, Observation]:
+    """``extracted`` with the ``extraction_metrics`` aggregates observed: the
+    action that runs the returned DataFrame (the job's write) computes them
+    on the rows it passes, with no Spark job of its own, and
+    ``observation.get`` returns them afterwards as a dict."""
+    metrics = Observation()
+    return extracted.observe(metrics, *_metric_columns()), metrics

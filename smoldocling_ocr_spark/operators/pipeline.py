@@ -13,12 +13,17 @@ Scale design notes (100 TB / 10^12 docs):
     bytes/core; no stage barrier besides the input exchange
   * oversized payloads are size-tiered (``payload_tier``) so a handful of
     50 MB documents can be routed to a dedicated low-parallelism pass
-    instead of stalling a batch (``split_by_tier``)
+    instead of stalling a batch (``split_by_tier``); the normal pass
+    observes how many it routed away, so the job runs that pass only when
+    there is one, without probing the input in a job of its own
   * checkpoint-resume is a ``left_anti`` join against the output table on
     url (the reference's md5-memo cache, re-expressed; app.py:242-249)
   * per-partition lineage (docs, bytes, parse failures) needs no second
     input scan: the same fused pass stamps (partition_id, payload_bytes)
-    on every row and ``lineage.extraction_lineage`` aggregates the output
+    on every row and ``lineage.extraction_lineage`` aggregates the output;
+    that re-read of the written table is the job's only one, because the
+    run metrics are observed inside each pass's write
+    (``lineage.observe_metrics``) and printed as one JSON line per pass
 """
 
 from __future__ import annotations
@@ -27,7 +32,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, functions as F, types as T
 
 from ..functions.extract import extract_document
 
@@ -113,12 +118,22 @@ def with_payload_tier(docs: DataFrame) -> DataFrame:
     return docs.withColumn("payload_tier", tier)
 
 
-def split_by_tier(docs: DataFrame, oversized_tier: int = 3) -> tuple[DataFrame, DataFrame]:
-    """(normal, oversized) — route giants to a dedicated low-parallelism pass."""
+def split_by_tier(
+    docs: DataFrame, oversized_tier: int = 3, probe: Observation | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """(normal, oversized) — route giants to a dedicated low-parallelism pass.
+
+    With ``probe``, the normal side also counts the rows it filters out:
+    after its action has run, ``probe.get["oversized"]`` says whether the
+    oversized pass has anything to do, with no probe job of its own. The
+    oversized side is built from the unobserved input, because an
+    Observation can be used by one DataFrame only."""
     tiered = with_payload_tier(docs)
+    big = F.col("payload_tier") >= oversized_tier
+    scanned = tiered if probe is None else tiered.observe(probe, F.count_if(big).alias("oversized"))
     return (
-        tiered.filter(F.col("payload_tier") < oversized_tier).drop("payload_tier"),
-        tiered.filter(F.col("payload_tier") >= oversized_tier).drop("payload_tier"),
+        scanned.filter(F.col("payload_tier") < oversized_tier).drop("payload_tier"),
+        tiered.filter(big).drop("payload_tier"),
     )
 
 

@@ -882,42 +882,44 @@ def pq_fit(
             F.array(*[F.slice("embedding", s * d + 1, d) for s in range(m)])
         ).alias("sub_id", "subvec")
     ).persist()
-    for _ in range(iters):
-        matrix = _matrix_expr([[[float(v) for v in c] for c in book] for book in books])
-        dists = F.transform(
-            F.element_at(matrix, F.col("sub_id") + 1),
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.col("subvec"),
-                    c,
-                    lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
+    try:
+        for _ in range(iters):
+            matrix = _matrix_expr([[[float(v) for v in c] for c in book] for book in books])
+            dists = F.transform(
+                F.element_at(matrix, F.col("sub_id") + 1),
+                lambda c: F.aggregate(
+                    F.zip_with(
+                        F.col("subvec"),
+                        c,
+                        lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
+                    ),
+                    F.lit(0.0),
+                    lambda acc, v: acc + v,
                 ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        agg = (
-            subs.select(
-                "sub_id",
-                (F.array_position(dists, F.array_min(dists)) - 1)
-                .cast("int")
-                .alias("code"),
-                "subvec",
             )
-            .groupBy("sub_id", "code")
-            .agg(
-                *[
-                    F.avg(F.element_at("subvec", i + 1).cast("double")).alias(f"c{i}")
-                    for i in range(d)
-                ]
+            agg = (
+                subs.select(
+                    "sub_id",
+                    (F.array_position(dists, F.array_min(dists)) - 1)
+                    .cast("int")
+                    .alias("code"),
+                    "subvec",
+                )
+                .groupBy("sub_id", "code")
+                .agg(
+                    *[
+                        F.avg(F.element_at("subvec", i + 1).cast("double")).alias(f"c{i}")
+                        for i in range(d)
+                    ]
+                )
+                .collect()
             )
-            .collect()
-        )
-        new_books = [list(b) for b in books]  # empty cells keep old centroid
-        for r in agg:
-            new_books[r.sub_id][r.code] = [r[f"c{i}"] for i in range(d)]
-        books = new_books
-    subs.unpersist()
+            new_books = [list(b) for b in books]  # empty cells keep old centroid
+            for r in agg:
+                new_books[r.sub_id][r.code] = [r[f"c{i}"] for i in range(d)]
+            books = new_books
+    finally:
+        subs.unpersist()
     return books
 
 
