@@ -13,7 +13,6 @@ Layout:
   sources/     table readers / corpus synthesis
   operators/   Spark DataFrame operators (pipeline, dedup, simsearch, ...)
   plans/       query catalog (queries() / oracle_sql() twins)
-  streaming/   foreachBatch adapter (reference is batch-only; SURVEY.md §2.10)
 """
 
 __version__ = "0.1.0"

@@ -173,11 +173,15 @@ def register(query) -> None:
         # a map-side projection — instead of a corpus-wide
         # (doc_id, shingle) DISTINCT, which shuffled the full exploded gram
         # relation (260k rows at sf0.1; the whole corpus at scale) just to
-        # dedup within each doc. Same rows out: grams are already unique
-        # per doc after array_distinct, and df/sz/candidates derive from
-        # the identical per-doc sets (the oracle's DISTINCT is per doc_id
-        # too — a shingle appearing in many docs still yields one row per
-        # doc either way).
+        # dedup within each doc. Grams are unique per doc after
+        # array_distinct, and the oracle's DISTINCT is per doc_id too (a
+        # shingle appearing in many docs still yields one row per doc).
+        # Grams are deduped as strings, before xxhash64, so an intra-doc
+        # 64-bit hash collision (~2^-64) between two distinct grams gives a
+        # duplicate (doc_id, sh) row and that shingle's df reads one high.
+        # That can only reorder the rarest-first prefix; the verified sets
+        # are unchanged (collect_set and array_intersect dedup), so the
+        # exact Jaccard check is unaffected.
         sh = (
             spread(docs)
             .select("doc_id", F.explode(F.array_distinct(word_grams(toks, n))).alias("g"))

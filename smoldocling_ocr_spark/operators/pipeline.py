@@ -87,7 +87,8 @@ def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 # north_rule: record parse failures in lineage, never raise
                 res = {"url": url, "parse_failed": True}
             res["partition_id"] = pid
-            res["payload_bytes"] = len(payload)
+            # a NULL html fails extraction above; it must not fail the batch
+            res["payload_bytes"] = 0 if payload is None else len(payload)
             rows.append({col: res.get(col) for col in _OUT_COLS})
         yield pd.DataFrame(rows, columns=_OUT_COLS)
 
@@ -107,8 +108,9 @@ def with_salted_partitioning(docs: DataFrame, num_partitions: int | None = None)
 
 
 def with_payload_tier(docs: DataFrame) -> DataFrame:
-    """Size-tier the payload column: 0 ≤64KB, 1 ≤1MB, 2 ≤8MB, 3 oversized."""
-    size = F.length(F.col("html"))
+    """Size-tier the payload column: 0 ≤64KB, 1 ≤1MB, 2 ≤8MB, 3 oversized.
+    A NULL payload is tier 0: it fails in the normal pass, it is no giant."""
+    size = F.coalesce(F.length(F.col("html")), F.lit(0))
     tier = (
         F.when(size <= 64 * 1024, F.lit(0))
         .when(size <= 1024 * 1024, F.lit(1))

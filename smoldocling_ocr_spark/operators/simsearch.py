@@ -884,27 +884,10 @@ def pq_fit(
     ).persist()
     try:
         for _ in range(iters):
-            matrix = _matrix_expr([[[float(v) for v in c] for c in book] for book in books])
-            dists = F.transform(
-                F.element_at(matrix, F.col("sub_id") + 1),
-                lambda c: F.aggregate(
-                    F.zip_with(
-                        F.col("subvec"),
-                        c,
-                        lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-            )
+            matrix = _matrix_expr(books)
+            dists = _sq_dists(F.col("subvec"), F.element_at(matrix, F.col("sub_id") + 1))
             agg = (
-                subs.select(
-                    "sub_id",
-                    (F.array_position(dists, F.array_min(dists)) - 1)
-                    .cast("int")
-                    .alias("code"),
-                    "subvec",
-                )
+                subs.select("sub_id", _argmin(dists).alias("code"), "subvec")
                 .groupBy("sub_id", "code")
                 .agg(
                     *[
@@ -923,24 +906,79 @@ def pq_fit(
     return books
 
 
-def _pq_codes_expr(books: list[list[list[float]]]):
-    """array<int> of PQ_M nearest-code ids per row — one matrix literal,
-    shuffle-free, constant codegen shape across refits."""
-    m = len(books)
-    d = DIM // m
-    matrix = _matrix_expr([[[float(v) for v in c] for c in book] for book in books])
-    def code_for(s: int):
-        sub = F.slice("embedding", s * d + 1, d)
-        dists = F.transform(
-            F.element_at(matrix, s + 1),
-            lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
+def _sq_dists(sub, codes, acc_type: str = "double"):
+    """Squared L2 distance from the sub-vector ``sub`` to every code of the
+    codebook array ``codes``, summed as ``acc_type``: "double" for float
+    vectors, "long" for the integer-quantized twin (exact in any engine)."""
+    return F.transform(
+        codes,
+        lambda c: F.aggregate(
+            F.zip_with(sub, c, lambda x, y: (x.cast(acc_type) - y) * (x.cast(acc_type) - y)),
+            F.lit(0).cast(acc_type),
+            lambda acc, v: acc + v,
+        ),
+    )
+
+
+def _argmin(dists):
+    """0-based index of the smallest distance; ties go to the first."""
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+
+
+def _pq_codes_expr(books, col: str = "embedding", acc_type: str = "double"):
+    """array<int> of the nearest-code id per subspace of array column
+    ``col`` — one matrix literal, shuffle-free, constant codegen shape
+    across refits."""
+    d = DIM // len(books)
+    matrix = _matrix_expr(books)
+    return F.array(
+        *[
+            _argmin(_sq_dists(F.slice(col, s * d + 1, d), F.element_at(matrix, s + 1), acc_type))
+            for s in range(len(books))
+        ]
+    )
+
+
+def _adc_tables(spark: SparkSession, q_rows, books, acc_type: str = "double") -> DataFrame:
+    """(query_id, M×K table) per collected ``(id, vector)`` query row: the
+    squared distance from each query sub-vector to every code of its
+    subspace. Tiny, so the searches broadcast it."""
+    d = DIM // len(books)
+    tables = [
+        (
+            int(qid),
+            [
+                [sum((qv[s * d + i] - c[i]) ** 2 for i in range(d)) for c in book]
+                for s, book in enumerate(books)
+            ],
         )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    return F.array(*[code_for(s) for s in range(m)])
+        for qid, qv in q_rows
+    ]
+    return spark.createDataFrame(tables, f"query_id long, tab array<array<{acc_type}>>")
+
+
+def _adc_topk(pairs: DataFrame, topk: int, acc_type: str = "double") -> DataFrame:
+    """Per-query top-k over (query, candidate) ``pairs`` carrying the
+    candidate's ``codes`` and the query's ADC ``tab``: a distance is M table
+    lookups summed. Float sums round to 6 places so ranks do not hinge on
+    summation order; integer sums are exact. Ties break to the lowest
+    neighbor id."""
+    adc = F.aggregate(
+        F.zip_with(F.col("codes"), F.col("tab"), lambda c, t: F.element_at(t, c + 1)),
+        F.lit(0).cast(acc_type),
+        lambda acc, v: acc + v,
+    )
+    if acc_type == "double":
+        adc = F.round(adc, 6)
+    w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
+    return (
+        pairs.filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adist"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= topk)
+        .select("query_id", "neighbor_id", "rank")
+        .orderBy("query_id", "rank")
+    )
 
 
 def pq_encode(emb: DataFrame, books: list[list[list[float]]]) -> DataFrame:
@@ -969,44 +1007,11 @@ def pq_topk(
     emb = read_table(spark, sf_dir, "embeddings")
     if books is None:
         books = pq_fit(emb, m=m, k=k, iters=iters)
-    d = DIM // m
     # spread: the m×k×(DIM/m) nearest-code encode is the heavy per-row step
     encoded = pq_encode(spread(emb), books)
-    q_rows = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    tables = []  # (query_id, M×K double table) as rows of a broadcast df
-    for r in q_rows:
-        qv = [float(v) for v in r.embedding]
-        tab = [
-            [
-                sum((qv[s * d + i] - c[i]) ** 2 for i in range(d))
-                for c in books[s]
-            ]
-            for s in range(m)
-        ]
-        tables.append((int(r.vec_id), tab))
-    qdf = spark.createDataFrame(tables, "query_id long, tab array<array<double>>")
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(F.col("codes"), F.col("tab"), lambda c, t: F.element_at(t, c + 1)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        encoded.crossJoin(F.broadcast(qdf))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    )
+    q_rows = emb.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding").collect()
+    qdf = _adc_tables(spark, q_rows, books)
+    return _adc_topk(encoded.crossJoin(F.broadcast(qdf)), topk)
 
 
 PQ_QUANT = 64  # fixed-books twin: floor(x*64) int quantization, exact cross-engine
@@ -1043,50 +1048,12 @@ def pq_topk_fixed_books(
         F.col("embedding"), lambda x: F.floor(x.cast("double") * PQ_QUANT).cast("long")
     )
     quant = emb.select("vec_id", qe.alias("qe"))
-    matrix = _matrix_expr(books)
-
-    def code_for(s: int):
-        sub = F.slice("qe", s * d + 1, d)
-        dists = F.transform(
-            F.element_at(matrix, s + 1),
-            lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
     # spread: integer encode (m×k×d squared-diff folds per row) off the
     # single-task scan; all-BIGINT arithmetic, so values are unaffected
-    encoded = spread(quant).select(
-        "vec_id", F.array(*[code_for(s) for s in range(m)]).alias("codes")
-    )
+    encoded = spread(quant).select("vec_id", _pq_codes_expr(books, "qe", "long").alias("codes"))
     q_rows = quant.filter(F.col("vec_id") < n_queries).collect()
-    tables = []
-    for r in q_rows:
-        qv = [int(v) for v in r.qe]
-        tab = [
-            [sum((qv[s * d + i] - books[s][c][i]) ** 2 for i in range(d)) for c in range(k)]
-            for s in range(m)
-        ]
-        tables.append((int(r.vec_id), tab))
-    qdf = spark.createDataFrame(tables, "query_id long, tab array<array<long>>")
-    adc = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("tab"), lambda c, t: F.element_at(t, c + 1)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        encoded.crossJoin(F.broadcast(qdf))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    )
+    qdf = _adc_tables(spark, q_rows, books, "long")
+    return _adc_topk(encoded.crossJoin(F.broadcast(qdf)), topk, "long")
 
 
 def register_pq(query) -> None:
@@ -1169,7 +1136,6 @@ def ivf_pq_topk(
     emb = read_table(spark, sf_dir, "embeddings")
     if books is None:
         books = pq_fit(emb, m=m, k=k)
-    d = DIM // m
     encoded = spread(emb).select("vec_id", "label", _pq_codes_expr(books).alias("codes"))
     cent = emb.groupBy("label").agg(
         F.array(
@@ -1184,16 +1150,7 @@ def ivf_pq_topk(
     )
     psim = F.round(_cosine(F.col("qe"), F.col("cvec")), 5)
     wprobe = W.partitionBy("query_id").orderBy(F.desc("psim"), F.asc("label"))
-    q_rows = q.collect()
-    tables = []
-    for r in q_rows:
-        qv = [float(v) for v in r.qe]
-        tab = [
-            [sum((qv[s * d + i] - c[i]) ** 2 for i in range(d)) for c in books[s]]
-            for s in range(m)
-        ]
-        tables.append((int(r.query_id), tab))
-    qtab = spark.createDataFrame(tables, "query_id long, tab array<array<double>>")
+    qtab = _adc_tables(spark, q.collect(), books)
     probes = (
         q.crossJoin(F.broadcast(cent))
         .select("query_id", "label", psim.alias("psim"))
@@ -1202,24 +1159,7 @@ def ivf_pq_topk(
         .select("query_id", "label")
         .join(qtab, "query_id")
     )
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(F.col("codes"), F.col("tab"), lambda c, t: F.element_at(t, c + 1)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        encoded.join(F.broadcast(probes), on="label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _adc_topk(encoded.join(F.broadcast(probes), on="label"), topk)
 
 
 def register_ivf_pq(query) -> None:

@@ -25,7 +25,7 @@ def get_spark(
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
-    n_cores = os.cpu_count() or 8 if cores == "*" else int(cores)
+    n_cores = (os.cpu_count() or 8) if cores == "*" else int(cores)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * n_cores, 8)
 

@@ -104,10 +104,17 @@ def test_extract_job_spark_jobs_pinned(spark, cc_docs, tmp_path):
     """One run over an input with no giant issues at most 6 Spark jobs: the
     oversized probe and the run metrics are observed inside the write, and
     the lineage write is the only re-read of the output. The printed metrics
-    count exactly the rows written."""
+    count exactly the rows written. A NULL payload in the input is one
+    parse-failed row of the normal pass, not a giant and not a job failure."""
+    from pyspark.sql import Row
+
+    null = spark.createDataFrame(
+        [Row(url="https://x/null", warc_ts=dt.datetime(2024, 1, 1), html=None, text="", lang="en")],
+        cc_docs.schema,
+    )
     inp = str(tmp_path / "docs_in")
     out = str(tmp_path / "extracted")
-    cc_docs.limit(10).write.parquet(inp)
+    cc_docs.limit(10).unionByName(null).write.parquet(inp)
 
     lines, jobs = _run_job_in_process(
         spark, ["--input", inp, "--output", out, "--lineage", out + "-lineage", "--cores", CORES]
@@ -115,8 +122,10 @@ def test_extract_job_spark_jobs_pinned(spark, cc_docs, tmp_path):
     assert 0 < len(jobs) <= 6, jobs
     written = spark.read.parquet(out)
     assert [m["extract_pass"] for m in lines] == ["normal"]
-    assert lines[0]["docs"] == written.count() == 10
+    assert lines[0]["docs"] == written.count() == 11
+    assert lines[0]["parse_failures"] == 1
     assert written.filter("extract_pass = 'oversized'").count() == 0
+    assert [r["url"] for r in written.filter("parse_failed").collect()] == ["https://x/null"]
 
 
 def test_extract_job_oversized_pass(spark, cc_docs, tmp_path):
@@ -168,6 +177,26 @@ def test_make_pyfiles_zip(tmp_path):
     assert "smoldocling_ocr_spark/__init__.py" in names
     assert any(n.endswith("operators/pipeline.py") for n in names)
     assert not any("__pycache__" in n for n in names)
+    # every shipped module imports with the zip as the only package source
+    # (-I: no PYTHONPATH, no cwd on sys.path), so an import of a module the
+    # zip lacks fails here rather than on the executors
+    code = (
+        "import importlib, pkgutil, sys\n"
+        "sys.path.insert(0, sys.argv[1])\n"
+        "import smoldocling_ocr_spark as pkg\n"
+        "assert pkg.__file__.startswith(sys.argv[1]), pkg.__file__\n"
+        "mods = [m.name for m in pkgutil.walk_packages(pkg.__path__, 'smoldocling_ocr_spark.')]\n"
+        "for name in mods:\n"
+        "    importlib.import_module(name)\n"
+        "print(len(mods))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-I", "-c", code, out],
+        capture_output=True, text=True, timeout=120, cwd=str(tmp_path),
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    shipped = sum(n.endswith(".py") and not n.endswith("__init__.py") for n in names)
+    assert int(proc.stdout.split()[-1]) >= shipped
 
 
 @pytest.mark.slow

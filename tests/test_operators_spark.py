@@ -1,5 +1,5 @@
-"""Spark operator tests: staged element pipeline, streaming adapter,
-multimodal plumbing, figure detection, export formats."""
+"""Spark operator tests: staged element pipeline, multimodal plumbing,
+figure detection, export formats."""
 
 from __future__ import annotations
 
@@ -50,21 +50,6 @@ def test_table_membership_anti_join(spark, cc_docs):
     texts = elements.filter(F.col("type") == "text")
     kept = table_membership_filter(elements)
     assert kept.count() <= texts.count()
-
-
-def test_streaming_foreachbatch(spark, cc_docs, tmp_path):
-    from smoldocling_ocr_spark.streaming.adapter import start_extract_stream
-
-    src = str(tmp_path / "src")
-    cc_docs.limit(6).write.parquet(src)
-    stream = spark.readStream.schema(cc_docs.schema).parquet(src)
-    q = start_extract_stream(
-        stream, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "out"))
-    assert out.count() == 6
-    assert "markdown" in out.columns
 
 
 def _png_bytes(width: int, height: int) -> bytes:
@@ -234,16 +219,13 @@ def test_export_formats():
 
 
 def test_resume_and_lineage(spark, cc_docs):
-    from smoldocling_ocr_spark.operators.lineage import extraction_metrics, partition_lineage
+    from smoldocling_ocr_spark.operators.lineage import extraction_metrics
     from smoldocling_ocr_spark.operators.pipeline import extract_documents
 
     extracted = extract_documents(cc_docs.limit(10), num_partitions=4).cache()
     metrics = extraction_metrics(extracted).collect()[0]
     assert metrics["docs"] == 10
     assert metrics["parse_failures"] == 0
-    lineage = partition_lineage(cc_docs.limit(10)).collect()
-    assert sum(r["doc_count"] for r in lineage) == 10
-    assert all(r["bytes_processed"] > 0 for r in lineage if r["doc_count"])
 
 
 def test_extraction_lineage_same_pass(spark, cc_docs):
@@ -301,10 +283,17 @@ def test_corrupt_payload_captured(spark):
     from smoldocling_ocr_spark.operators.pipeline import extract_documents
 
     bad = spark.createDataFrame(
-        [Row(url="https://x/bad", warc_ts=dt.datetime(2024, 1, 1), html=bytearray(b"DOCLAYv1\n{oops"), text="", lang="en")]
+        [
+            Row(url="https://x/bad", warc_ts=dt.datetime(2024, 1, 1), html=bytearray(b"DOCLAYv1\n{oops"), text="", lang="en"),
+            Row(url="https://x/null", warc_ts=dt.datetime(2024, 1, 1), html=None, text="", lang="en"),
+        ],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    out = extract_documents(bad, salt=False).collect()
-    assert out[0]["parse_failed"] is True
+    out = {r["url"]: r for r in extract_documents(bad, salt=False).collect()}
+    assert out["https://x/bad"]["parse_failed"] is True
+    # a NULL payload is one failed row, not a failed stage
+    assert out["https://x/null"]["parse_failed"] is True
+    assert out["https://x/null"]["payload_bytes"] == 0
 
 
 def test_oversized_payload_tier_routing(spark, cc_docs):
@@ -326,9 +315,13 @@ def test_oversized_payload_tier_routing(spark, cc_docs):
             )
         ]
     )
-    docs = cc_docs.limit(4).unionByName(giant)
+    null = spark.createDataFrame(
+        [Row(url="https://x/null", warc_ts=dt.datetime(2024, 1, 1), html=None, text="", lang="en")],
+        giant.schema,
+    )
+    docs = cc_docs.limit(4).unionByName(giant).unionByName(null)
     normal, oversized = split_by_tier(docs)
-    assert normal.count() == 4
+    assert normal.count() == 5  # the NULL payload stays in the normal pass
     big = oversized.collect()
     assert len(big) == 1 and big[0]["url"] == "https://giant.example.com/big"
     out = extract_documents(oversized, num_partitions=2, salt=False).collect()
@@ -342,78 +335,6 @@ def test_empty_input_yields_empty_output(spark, cc_docs):
     assert out.count() == 0
     # schema survives the empty path (Arrow empty-batch handling)
     assert "markdown" in out.columns and "parse_failed" in out.columns
-
-
-def test_streaming_windowed_watermark_agg(spark, tmp_path):
-    """Event-time tumbling window + watermark over a streamed events table;
-    the batch run of the same relation is the oracle (complete mode drains
-    all windows under availableNow)."""
-    from smoldocling_ocr_spark.streaming.windowed import windowed_event_counts
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "ev_src")
-    events.write.parquet(src)
-
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], r["value_sum"])
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    want = {
-        (r["window_start"], r["event_type"]): (r["n"], r["value_sum"])
-        for r in windowed_event_counts(events).collect()
-    }
-    assert got == want and len(got) > 1
-
-
-def test_streaming_stateful_first_seen_dedup(spark, cc_docs, tmp_path):
-    """applyInPandasWithState first-seen filter: duplicates split across two
-    microbatches (maxFilesPerTrigger=1) must dedup ACROSS batches via the
-    state store, not just within one batch."""
-    import datetime as dt
-    from pyspark.sql import functions as F
-    from smoldocling_ocr_spark.streaming.stateful import first_seen_filter
-
-    base = cc_docs.limit(4).cache()
-    src = str(tmp_path / "dup_src")
-    base.coalesce(1).write.parquet(src)  # batch 1: originals (one file)
-    # batch 2: re-crawls of the same urls, later warc_ts
-    base.withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        first_seen_filter(stream)
-        .writeStream.format("memory")
-        .queryName("first_seen")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    out = spark.sql("SELECT url, warc_ts FROM first_seen").collect()
-    assert len(out) == 4
-    firsts = {r["url"]: r["warc_ts"] for r in base.select("url", "warc_ts").collect()}
-    got = {r["url"]: r["warc_ts"] for r in out}
-    assert set(got) == set(firsts)
-    # every emitted row is the earliest crawl of its url
-    assert all(got[u] == min(firsts[u], firsts[u] + dt.timedelta(days=1)) for u in got)
 
 
 def test_extraction_lineage_run_pass_discriminators(spark, cc_docs):
@@ -607,59 +528,37 @@ def test_cluster_conf_profile():
     assert all(isinstance(v, str) for v in conf.values())
 
 
-def test_extract_doc_udtf_sql_surface(spark, cc_docs):
-    """The extractor as a SQL lateral table function (Spark 4 Python UDTF):
-    markdown from plain SQL matches the mapInPandas pipeline byte-for-byte."""
-    from smoldocling_ocr_spark.operators.pipeline import extract_documents
-    from smoldocling_ocr_spark.plans.udtf import register_extract_udtf
-
-    register_extract_udtf(spark)
-    cc_docs.limit(6).createOrReplaceTempView("udtf_docs")
-    got = {
-        r["url"]: (r["markdown"], r["method"])
-        for r in spark.sql(
-            "SELECT e.* FROM udtf_docs AS t, "
-            "LATERAL extract_doc(t.url, t.warc_ts, t.html, t.text) AS e"
-        ).collect()
-    }
-    want = {
-        r["url"]: (r["markdown"], r["method"])
-        for r in extract_documents(cc_docs.limit(6), salt=False).collect()
-    }
-    assert got == want and len(got) == 6
-
-
-def test_streaming_restart_exactly_once(spark, cc_docs, tmp_path):
-    """Checkpointed restart: a second availableNow run over the same
-    checkpoint processes ONLY files that arrived after the first run —
-    no re-extraction, no duplicate urls in the sink (the streaming form of
-    the north-rule checkpoint-resume contract)."""
+def test_get_spark_sizes_shuffle_partitions_by_cores():
+    """An explicit ``cores`` sizes the shuffle partitions (2 per core), not
+    the host's CPU count; ``"*"`` takes the CPU count. ``SparkSession.builder``
+    is replaced by a recorder of its conf, so no session starts."""
     import os
+    from unittest import mock
 
-    from smoldocling_ocr_spark.streaming.adapter import start_extract_stream
+    from pyspark.sql import SparkSession
+    from smoldocling_ocr_spark.session import get_spark
 
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    rows = cc_docs.limit(10).collect()
-    first, second = rows[:6], rows[6:]
-    spark.createDataFrame(first).coalesce(1).write.mode("append").parquet(src)
+    class Recorder:
+        def __init__(self):
+            self.conf = {}
 
-    stream = spark.readStream.schema(cc_docs.schema).parquet(src)
-    q = start_extract_stream(stream, out, ckpt)
-    q.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 6
+        def master(self, _):
+            return self
 
-    # late arrivals land in the same source directory
-    spark.createDataFrame(second).coalesce(1).write.mode("append").parquet(src)
-    stream2 = spark.readStream.schema(cc_docs.schema).parquet(src)
-    q2 = start_extract_stream(stream2, out, ckpt)
-    q2.awaitTermination(120)
+        appName = master
 
-    got = spark.read.parquet(out)
-    assert got.count() == 10, "restart must process only the new files"
-    assert got.select("url").distinct().count() == 10
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return mock.MagicMock()
+
+    for cores, want in ((os.cpu_count() + 4, 2 * (os.cpu_count() + 4)), ("*", max(2 * os.cpu_count(), 8))):
+        recorder = Recorder()
+        with mock.patch.object(SparkSession, "builder", recorder):
+            get_spark(cores=cores)
+        assert recorder.conf["spark.sql.shuffle.partitions"] == str(want)
 
 
 def test_span_dedup_owner_encoding_overflow_raises(spark):
